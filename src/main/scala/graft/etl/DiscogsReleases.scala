@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
   * Spark-first.
   *
   * The reference's 931 LoC of hand-rolled pull parsing, grammar
-  * validation, columnar builders and batched Parquet writing collapse
-  * to: one declared read schema (ReleaseSchema.xmlSchema), one
-  * `spark.read.format("xml")`, one projection, one
-  * `write.parquet` — Catalyst and the Parquet writer supply the
-  * column pruning, batching, dictionary encoding and Snappy
-  * compression the reference implements manually (SURVEY.md §4).
+  * validation, columnar builders and batched Parquet writing become:
+  * one streaming pull parser that walks the same grammar
+  * ([[ReleaseReader]], served to Spark as the file source
+  * [[ReleaseXmlFormat]]) and emits rows of one declared read schema
+  * (ReleaseSchema.xmlSchema), one projection, one `write.parquet` —
+  * the Parquet writer supplies the batching, dictionary encoding and
+  * Snappy compression the reference implements manually (SURVEY.md
+  * §4).
   *
   * Semantics replicated exactly (pinned by DiscogsReleasesSpec):
   *  - `catno` attr → `cat_no` column (`main.rs:649-653` vs `181`)
@@ -28,9 +30,11 @@ import org.apache.spark.sql.functions._
   *
   * Known deviation (documented, not copied): the reference manually
   * unescapes ONLY `&amp;` in genre/style text (`main.rs:596`, `619`),
-  * so `&lt;` etc. would pass through escaped. Spark's XML reader
-  * unescapes all standard entities. For `&amp;` — the only entity in
-  * real Discogs genre/style values — behavior is identical.
+  * so `&lt;` etc. would pass through escaped. [[ReleaseReader]]
+  * decodes all five predefined entities and numeric character
+  * references everywhere, as Spark's XML source did before it. For
+  * `&amp;` — the only entity in real Discogs genre/style values —
+  * behavior is identical.
   *
   * Scale: one `.xml.gz` is non-splittable (one task — same
   * sequential bound as the reference). At 100 TB you'd ingest many
@@ -42,18 +46,14 @@ object DiscogsReleases {
 
   private def emptyArr(tpe: String): Column = array().cast(s"array<$tpe>")
 
-  /** Read the raw XML with the declared schema (FAILFAST: malformed
-    * content errors out rather than yielding silent nulls — the
-    * Spark equivalent of the reference's panic-on-unexpected,
-    * SURVEY S3/S5/S6).
+  /** Read the raw XML as rows of ReleaseSchema.xmlSchema, one task per
+    * file. Malformed content fails the read ("Malformed" in the cause)
+    * rather than yielding silent nulls or dropped releases — the
+    * reference's panic-on-unexpected, SURVEY S3/S5/S6.
     */
   def read(spark: SparkSession, input: String): DataFrame =
     spark.read
-      .format("xml")
-      .option("rowTag", "release")
-      .option("attributePrefix", "_")
-      .option("valueTag", "_VALUE")
-      .option("mode", "FAILFAST")
+      .format(classOf[ReleaseXmlFormat].getName)
       .schema(ReleaseSchema.xmlSchema)
       .load(input)
 
@@ -62,9 +62,9 @@ object DiscogsReleases {
     * master_id flattening, and empty-list defaults.
     */
   def transformReleases(raw: DataFrame): DataFrame = {
-    // Spark's XML source yields "" for an empty element; the reference
-    // pushes null for empty <anv>/<join> (main.rs:718-741) — nullif
-    // restores that rule exactly.
+    // The reader yields "" for an empty element; the reference pushes
+    // null for empty <anv>/<join> (main.rs:718-741) — nullif restores
+    // that rule exactly.
     val artists = coalesce(
       transform(col("artists.artist"), a =>
         struct(
@@ -197,21 +197,12 @@ object DiscogsReleases {
       s"unknown release content (reference would panic): ${unknown.mkString(", ")}")
   }
 
-  /** Convert `input` XML to a snappy-parquet directory at `output`.
-    *
-    * `singleFile = true` coalesces to one task and leaves `output` as
-    * ONE parquet FILE named as requested — literal path parity with
-    * the reference's single `releases.parquet` (`main.rs:223-226`).
-    * Default is false: a directory of files is the scalable shape
-    * (one file per task), and everything downstream reads
-    * directories.
-    */
   /** Split one non-splittable `.xml.gz` dump into `n` independently
     * parsable gzipped chunks — the "re-chunk once" step that breaks
     * S1's single-thread bound: the dump's sequential gunzip+linesplit
     * is cheap IO (no XML parsing), and every downstream conversion
-    * then runs one task per chunk (EtlBench measures ~3.7× on 8
-    * files).
+    * then runs one task per chunk (`EtlBench` and perfbench's
+    * `etl_releases` time both paths).
     *
     * Relies on the dump's one-release-per-line layout (the reference
     * asserts exactly this — its grammar expects a newline after every
@@ -261,6 +252,15 @@ object DiscogsReleases {
     }
   }
 
+  /** Convert `input` XML to a snappy-parquet directory at `output`.
+    *
+    * `singleFile = true` coalesces to one task and leaves `output` as
+    * ONE parquet FILE named as requested — literal path parity with
+    * the reference's single `releases.parquet` (`main.rs:223-226`).
+    * Default is false: a directory of files is the scalable shape
+    * (one file per task), and everything downstream reads
+    * directories.
+    */
   def run(spark: SparkSession, input: String, output: String,
       singleFile: Boolean = false): Unit = {
     val out = transformReleases(read(spark, input))

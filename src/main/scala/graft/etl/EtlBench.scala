@@ -56,13 +56,14 @@ object EtlBench {
     val tGen = (System.nanoTime() - t0) / 1e9
 
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString)}]")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.sizeOfNull", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warm codegen/JIT on a small prefix
+    // warm codegen/JIT: one untimed conversion of the whole dump
     DiscogsReleases.run(spark, xml, s"$tmp/warm")
 
     val t1 = System.nanoTime()

@@ -6,16 +6,16 @@ import org.apache.spark.sql.types._
   *
   * Mirrors the reference's hard-coded Arrow schema
   * (`/root/reference/src/main.rs:179-217`) — see SURVEY.md §1.2 for
-  * the full type mapping. Two schemas exist because Spark's XML
-  * source sees attributes as `_`-prefixed fields and wraps repeated
-  * child elements in their container element.
+  * the full type mapping. Two schemas exist because the read side
+  * keeps the XML's shape (the shape Spark's XML source gives it):
+  * attributes are `_`-prefixed fields and repeated child elements
+  * stay wrapped in their container element.
   */
 object ReleaseSchema {
 
   /** Artist child fields we keep. `role`/`tracks` are intentionally
     * absent: the reference reads and discards them
-    * (`main.rs:742-749`); omitting them from the read schema makes the
-    * XML source never materialize them (column pruning, SURVEY S13).
+    * (`main.rs:742-749`), and so does ReleaseReader (SURVEY S13).
     */
   val artistXml: StructType = StructType(Seq(
     StructField("id", StringType, nullable = true),
@@ -24,21 +24,22 @@ object ReleaseSchema {
     StructField("join", StringType, nullable = true)))
 
   /** Label: attribute-only empty elements (`main.rs:626-668`).
-    * Unknown attributes are silently ignored by schema omission —
-    * matching the reference (`main.rs:662`).
+    * Unknown attributes are silently ignored — matching the reference
+    * (`main.rs:662`).
     */
   val labelXml: StructType = StructType(Seq(
     StructField("_id", StringType, nullable = true),
     StructField("_catno", StringType, nullable = true),
     StructField("_name", StringType, nullable = true)))
 
-  /** Read-side schema for `spark.read.format("xml")` with
-    * `rowTag=release`, `attributePrefix=_`, `valueTag=_VALUE`.
+  /** Read-side schema: the rows ReleaseReader emits, laid out as
+    * `spark.read.format("xml")` with `rowTag=release`,
+    * `attributePrefix=_`, `valueTag=_VALUE` would read them.
     *
     * The nine skip-subtrees of the reference (`main.rs:758-917`:
     * images, extraartists, formats, country, data_quality, tracklist,
-    * videos, released, companies, notes, identifiers) are simply not
-    * declared — the source prunes them for free.
+    * videos, released, companies, notes, identifiers) are not
+    * declared — the reader walks over them without keeping anything.
     */
   val xmlSchema: StructType = StructType(Seq(
     StructField("_id", LongType, nullable = true), // u32-safe; cast to int on output

@@ -272,20 +272,111 @@ class DiscogsReleasesSpec extends SparkSpec {
   }
 
   test("malformed content fails loudly (FAILFAST ≈ the reference's panics)") {
-    // is_main_release="maybe" — the reference panics (main.rs:826-836);
-    // our declared BooleanType + FAILFAST raises instead of nulling.
-    val bad = new File(tmpDir, "bad.xml")
-    Files.writeString(bad.toPath,
-      """<releases>
-        |<release id="9" status="Accepted"><title>T</title><artists></artists><genres></genres><styles></styles><labels></labels><master_id is_main_release="maybe">7</master_id></release>
-        |</releases>""".stripMargin)
-    val e = intercept[Exception] {
-      DiscogsReleases.transformReleases(
-        DiscogsReleases.read(spark, bad.getAbsolutePath)).collect()
+    val cases = Seq(
+      // is_main_release="maybe" — the reference panics (main.rs:826-836)
+      // instead of nulling.
+      "bad_bool" -> """<release id="9" status="Accepted"><title>T</title><artists></artists><genres></genres><styles></styles><labels></labels><master_id is_main_release="maybe">7</master_id></release>
+        |</releases>""",
+      "bad_id" -> """<release id="9x" status="Accepted"><title>T</title></release>
+        |</releases>""",
+      "mismatched_end" -> """<release id="9" status="Accepted"><title>T</titel></release>
+        |</releases>""",
+      "undeclared_entity" -> """<release id="9" status="Accepted"><title>T&nbsp;U</title></release>
+        |</releases>""",
+      // A dump cut off mid-release: the reference's grammar panics at
+      // EOF; it must not convert silently without its last release.
+      "truncated" -> """<release id="9" status="Accepted"><title>T</title></release>
+        |<release id="10" status="Acc""")
+    cases.foreach { case (name, body) =>
+      val bad = new File(tmpDir, s"bad_$name.xml")
+      Files.writeString(bad.toPath, ("<releases>\n" + body).stripMargin)
+      val e = intercept[Exception] {
+        DiscogsReleases.transformReleases(
+          DiscogsReleases.read(spark, bad.getAbsolutePath)).collect()
+      }
+      assert(e.getMessage.contains("Malformed") ||
+        e.toString.contains("FAILFAST") ||
+        Option(e.getCause).exists(_.toString.contains("Malformed")),
+        s"$name: $e")
     }
-    assert(e.getMessage.contains("Malformed") ||
-      e.toString.contains("FAILFAST") ||
-      Option(e.getCause).exists(_.toString.contains("Malformed")),
-      e.toString)
+  }
+
+  /** Edge cases of the XML syntax the dump may use; each must read as
+    * Spark's XML source read it.
+    */
+  private val edgeXml =
+    """<?xml version="1.0" encoding="UTF-8"?>
+      |<!-- Discogs releases edge cases -->
+      |<releases>
+      |<release id="11" status="Accepted">
+      |  <title>
+      |    Pretty  printed
+      |  </title>
+      |  <!-- a comment between children -->
+      |  <artists>
+      |    <artist>
+      |      <id> 7 </id>
+      |      <name>Caf&#233; &#xE9;t&#xE9;</name>
+      |      <anv/>
+      |      <join>  &amp;  </join>
+      |      <role>Producer</role>
+      |    </artist>
+      |    <artist><id>8</id><name>  Two  </name><anv> A2 </anv><join/></artist>
+      |  </artists>
+      |  <genres><genre><![CDATA[Rock & <Roll>]]></genre><!-- c --><genre>  Pop  </genre></genres>
+      |  <styles/>
+      |  <labels><label id='5' catno='C&apos;1' name='L "one"' extra='x'/><label id="6" catno="" name=" padded "></label></labels>
+      |  <master_id> 42 </master_id>
+      |  <notes><p>deep <b>nested <i>skip</i></b> subtree</p></notes>
+      |</release>
+      |<release id="12" status="Draft"><title/><artists/><genres></genres><styles><style/></styles><labels/><master_id is_main_release="false"/></release>
+      |<release id="13" status="Deleted"><?pi ignored?><title>a<!-- x -->b&lt;c&gt;&quot;d&quot;</title><master_id is_main_release="TRUE">7</master_id></release>
+      |</releases>
+      |""".stripMargin
+
+  test("streaming reader gives the rows Spark's XML source gave (fixture and edge cases)") {
+    val edge = new File(tmpDir, "edge.xml")
+    Files.writeString(edge.toPath, edgeXml)
+    for (input <- Seq(gzPath, edge.getAbsolutePath)) {
+      val (streamed, xmlSource) = XmlSourceReference.bothReaders(spark, input)
+      assert(streamed.nonEmpty)
+      assert(streamed == xmlSource, input)
+      // A pruned, reordered scan keeps the asked-for columns only.
+      def pruned(df: org.apache.spark.sql.DataFrame) = df.select("title", "_id").collect().toSeq
+      assert(pruned(DiscogsReleases.read(spark, input)) ==
+        pruned(XmlSourceReference.read(spark, input)), input)
+    }
+    // Invalid UTF-8 (a Latin-1 "é" byte) is rejected by both.
+    val bytes = edgeXml.getBytes("UTF-8")
+    val at = edgeXml.indexOf("Pretty")
+    val badUtf8 = new File(tmpDir, "edge_bad_utf8.xml")
+    Files.write(badUtf8.toPath, bytes.take(at) ++ Array(0xE9.toByte) ++ bytes.drop(at))
+    val e = intercept[Exception](XmlSourceReference.bothReaders(spark, badUtf8.getAbsolutePath))
+    assert(Option(e.getCause).exists(_.toString.contains("Malformed")), e.toString)
+    intercept[Exception](XmlSourceReference.read(spark, badUtf8.getAbsolutePath).collect())
+  }
+
+  test("release-less input converts to no rows with the output schema") {
+    // 5 releases over 8 chunks: 3 chunks are a bare <releases></releases>.
+    val chunksDir = new File(tmpDir, "chunks8").getAbsolutePath
+    DiscogsReleases.rechunk(spark, gzPath, chunksDir, n = 8)
+    val texts = new File(chunksDir).listFiles().filter(_.getName.endsWith(".txt.gz")).map { f =>
+      val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    assert(texts.length == 8)
+    assert(texts.count(t => !t.contains("<release ")) == 3, texts.mkString("\n---\n"))
+    val outDir = new File(tmpDir, "out_chunks8").getAbsolutePath
+    DiscogsReleases.run(spark, chunksDir, outDir)
+    assert(spark.read.parquet(outDir).select("id").collect().map(_.getInt(0)).sorted.toSeq ==
+      Seq(1, 2, 3, 4, 5))
+
+    val bare = new File(tmpDir, "bare.xml")
+    Files.writeString(bare.toPath, "<releases>\n</releases>")
+    val bareOut = new File(tmpDir, "out_bare").getAbsolutePath
+    DiscogsReleases.run(spark, bare.getAbsolutePath, bareOut)
+    val rows = spark.read.parquet(bareOut)
+    assert(rows.count() == 0)
+    assert(rows.schema == result.schema)
   }
 }

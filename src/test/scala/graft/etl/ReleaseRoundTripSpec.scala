@@ -84,19 +84,21 @@ class ReleaseRoundTripSpec extends SparkSpec {
     sb.toString
   }
 
-  test("generated releases round-trip with exact field semantics") {
-    val n = 40
-    val releases = (0 until n).map { i =>
-      releaseG.pureApply(Gen.Parameters.default, Seed(42L + i)).copy(id = i + 1)
-    }
+  private val n = 40
+  private lazy val releases = (0 until n).map { i =>
+    releaseG.pureApply(Gen.Parameters.default, Seed(42L + i)).copy(id = i + 1)
+  }
+  private lazy val tmp = Files.createTempDirectory("roundtrip").toFile
+  private lazy val gz: File = {
     val xml = "<releases>\n" +
       releases.map(serialize).mkString("\n") + "\n</releases>\n"
-
-    val tmp = Files.createTempDirectory("roundtrip").toFile
-    val gz = new File(tmp, "gen.xml.gz")
-    val out = new GZIPOutputStream(new FileOutputStream(gz))
+    val f = new File(tmp, "gen.xml.gz")
+    val out = new GZIPOutputStream(new FileOutputStream(f))
     try out.write(xml.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    f
+  }
 
+  test("generated releases round-trip with exact field semantics") {
     val outDir = new File(tmp, "out").getAbsolutePath
     DiscogsReleases.run(spark, gz.getAbsolutePath, outDir)
     val got = spark.read.parquet(outDir).collect()
@@ -133,5 +135,11 @@ class ReleaseRoundTripSpec extends SparkSpec {
           assert(row.isNullAt(row.fieldIndex("master_id")))
       }
     }
+  }
+
+  test("generated releases convert to the same rows as through Spark's XML source") {
+    val (streamed, xmlSource) = XmlSourceReference.bothReaders(spark, gz.getAbsolutePath)
+    assert(streamed.size == n)
+    assert(streamed == xmlSource)
   }
 }
